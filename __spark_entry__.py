@@ -455,7 +455,12 @@ _PRIORITY = [
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    named = {
+    named: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+    for reg in _REGISTRIES:
+        for name, (fn, _oracle) in reg.items():
+            named[name] = fn
+    # explicit names win over registry entries on a collision
+    named.update({
         "kg_triples_flagship": kg_triples_flagship,
         "kg_canonical_entities": kg_canonical_entities,
         "t5_precedence": t5_precedence,
@@ -482,12 +487,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "export_biopax": export_biopax,
         "export_brat": export_brat,
         "brat_bio_align": brat_bio_align,
-    }
-    for reg in _REGISTRIES:
-        for name, (fn, _oracle) in reg.items():
-            named[name] = fn
+    })
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for name in _PRIORITY:
+        assert name in named, f"_PRIORITY names unknown query {name!r}"
         out[name] = named.pop(name)
     out.update(named)  # tail: r4-driver-green entries, registry order
     return out

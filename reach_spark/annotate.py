@@ -19,7 +19,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from .extract import annotate_sentence, split_sentences
+from .deps import light_deps
+from .extract import annotate_sentence, split_span
 from .schemas import SENTENCES
 
 
@@ -76,15 +77,15 @@ def media_spans(documents: DataFrame) -> DataFrame:
 
 def split_sentences_df(documents: DataFrame,
                        partitions: int | None = None) -> DataFrame:
-    """Light sentence rows (doc_id, sent_idx, sent_text) — the hot-path
-    unit handed to extraction.
+    """Light sentence rows (doc_id, sent_idx, sent_text) for consumers
+    that read only the sentence text (fries.sentence_frames).
 
-    Deliberately carries NO token arrays: annotation is re-derived inside
-    the extraction UDF (memoized per distinct sentence, ~0.04 ms/sentence)
-    because shipping five nested array columns through Arrow between
-    stages costs ~40x more than recomputing them. The fully annotated
-    `sentences` table (annotate_sentences) is produced once as the S4
-    resume artifact, not as an inter-stage exchange format."""
+    Carries NO token arrays. The extraction hot path does not read this
+    table either: mentions.extract_document_mentions splits and annotates
+    inside its own UDF, because shipping five nested array columns through
+    Arrow between stages costs ~40x more than recomputing them. The fully
+    annotated `sentences` table (annotate_sentences) is produced once as
+    the S4 resume artifact, not as an inter-stage exchange format."""
     spans = text_spans(documents)
     if partitions:
         spans = spans.repartition(partitions, "doc_id", "span_pos")
@@ -99,14 +100,7 @@ def split_sentences_df(documents: DataFrame,
                     continue
                 base = cache.get(text)
                 if base is None:
-                    base = split_sentences(text)
-                    # sent_idx = span_pos*1000 + li assumes < 1000 sentences
-                    # per span; fail loudly instead of silently colliding
-                    if len(base) >= 1000:
-                        raise ValueError(
-                            f"span yields {len(base)} sentences (>= 1000); "
-                            "sent_idx encoding would collide — split the "
-                            "span upstream")
+                    base = split_span(text)
                     if len(cache) < 100_000:
                         cache[text] = base
                 for li, sent in enumerate(base):
@@ -122,7 +116,8 @@ def split_sentences_df(documents: DataFrame,
 
 def annotate_sentences(documents: DataFrame,
                        partitions: int | None = None) -> DataFrame:
-    """documents → SENTENCES rows (tokenized, tagged, lemmatized).
+    """documents → SENTENCES rows (tokenized, tagged, lemmatized, with the
+    light dependency edges of reach_spark.deps).
 
     Sentence index is global per document: span_pos * 1000 + local sentence
     index keeps ordering without a per-doc shuffle (bounded: sentences per
@@ -145,13 +140,10 @@ def annotate_sentences(documents: DataFrame,
                 base = cache.get(text)
                 if base is None:
                     base = []
-                    sents = split_sentences(text)
-                    if len(sents) >= 1000:
-                        raise ValueError(
-                            f"span yields {len(sents)} sentences (>= 1000); "
-                            "sent_idx encoding would collide")
-                    for li, sent in enumerate(sents):
+                    for li, sent in enumerate(split_span(text)):
                         ann = annotate_sentence(sent)
+                        deps = light_deps(ann["words"], ann["tags"],
+                                          ann["lemmas"])
                         base.append({
                             "li": li,
                             "sent_text": sent,
@@ -162,7 +154,7 @@ def annotate_sentences(documents: DataFrame,
                             "lemmas": ann["lemmas"],
                             "entities": ["O"] * len(ann["words"]),
                             "deps": [{"src": s, "dst": d, "label": lbl}
-                                     for s, d, lbl in ann["deps"]],
+                                     for s, d, lbl in deps],
                         })
                     if len(cache) < 100_000:
                         cache[text] = base

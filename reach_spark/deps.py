@@ -13,8 +13,10 @@ Edge convention matches the reference's outgoingEdges orientation:
 (src=head token, dst=dependent token, label=relation). Deterministic,
 pure function of (words, tags, lemmas) — safe to recompute anywhere.
 
-First consumer: negation (extract.SentenceExtractor.detect_negations →
-neg edges from trigger tokens, NegationHandler.scala:18-41).
+Consumers: the `sentences` table (annotate.annotate_sentences) and the
+dependency-pattern rules of odin_graph.dep_event_matches (O2). The
+extraction hot path does not parse: its negation is surface-scoped
+(extract.SentenceExtractor.detect_negations).
 """
 
 from __future__ import annotations
@@ -421,15 +423,3 @@ def light_deps(words: list[str], tags: list[str],
             edges.append((i + 1, i, "advmod"))
 
     return edges
-
-
-def neg_cues_for_trigger(deps: list, trigger_start: int) -> list[int]:
-    """Cue token positions attached to `trigger_start` by a neg edge —
-    the NegationHandler.scala:18-41 outgoing-edge check."""
-    out = []
-    for e in deps:
-        src, dst, label = (e[0], e[1], e[2]) if not isinstance(e, dict) \
-            else (e["src"], e["dst"], e["label"])
-        if label == "neg" and src == trigger_start:
-            out.append(dst)
-    return out

@@ -109,6 +109,18 @@ def split_sentences(text: str) -> list[str]:
     return out
 
 
+def split_span(text: str) -> list[str]:
+    """split_sentences for one text span of a document. Spark paths number
+    a sentence span_pos * 1000 + its index in the span, so a span that
+    yields 1000 sentences or more fails loudly instead of colliding."""
+    sents = split_sentences(text)
+    if len(sents) >= 1000:
+        raise ValueError(
+            f"span yields {len(sents)} sentences (>= 1000); sent_idx "
+            "encoding would collide — split the span upstream")
+    return sents
+
+
 def tokenize(sent: str) -> tuple[list[str], list[int], list[int]]:
     words, starts, ends = [], [], []
     # unicode dash variants (en-dash complexes: 'p53–ASPP2 complex',
@@ -282,7 +294,6 @@ def annotate_sentence(sent_text: str) -> dict[str, Any]:
                                ends[:MAX_SENT_TOKENS])
     tags = pos_tag(words)
     lemmas = lemmatize(words)
-    from .deps import light_deps
     return {
         "sent_text": sent_text,
         "words": words,
@@ -290,9 +301,6 @@ def annotate_sentence(sent_text: str) -> dict[str, Any]:
         "end_offsets": ends,
         "tags": tags,
         "lemmas": lemmas,
-        # light deterministic dependency layer (N7 down-payment):
-        # grammar-relevant UD subset, reach_spark.deps
-        "deps": light_deps(words, tags, lemmas),
     }
 
 
@@ -1141,7 +1149,6 @@ class SentenceExtractor:
         self.lows = [w.lower() for w in self.words]
         self.tags: list[str] = ann["tags"]
         self.lemmas: list[str] = ann["lemmas"]
-        self.deps: list = ann.get("deps") or []
         self.n = len(self.words)
         self.dictionary = dictionary
         self.entities: list[Mention] = []
@@ -4017,23 +4024,16 @@ class SentenceExtractor:
                 # fixture corpus). The same nearest-following-trigger
                 # window below scopes it to the PP-local event.
                 neg_positions.append(i)
-        deps = self.deps
-        if not neg_positions and not deps:
+        if not neg_positions:
             return
-        from .deps import neg_cues_for_trigger
         for ev in self.events:
             ts = ev["trigger_start"]
             if ts is None:
                 continue
-            # primary source: neg edges from the trigger token in the
-            # light dependency layer (NegationHandler.scala:18-41
-            # outgoing-edge check); the surface window is the fallback for
-            # cues the chunker could not attach
-            in_scope = set(neg_cues_for_trigger(deps, ts))
-            in_scope |= {p for p in neg_positions
-                         if p < ts and ts - p <= 4 and not any(
-                             q in self.consumed_triggers
-                             for q in range(p + 1, ts))}
+            in_scope = {p for p in neg_positions
+                        if p < ts and ts - p <= 4 and not any(
+                            q in self.consumed_triggers
+                            for q in range(p + 1, ts))}
             if len(in_scope) % 2 == 1:  # parity rule F4
                 self._attach_negation(ev, self.words[min(in_scope)])
 

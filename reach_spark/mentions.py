@@ -1,4 +1,4 @@
-"""Mention extraction operator: sentences → flat mention rows.
+"""Mention extraction operator: documents → flat mention rows.
 
 One Arrow-batched pass runs the whole sentence-local Odin-style cascade
 (SURVEY §2.3: the rule-engine State is sentence-local, so entities, mods,
@@ -25,9 +25,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
-from .extract import SentenceExtractor, annotate_sentence, split_sentences
+from .extract import SentenceExtractor, annotate_sentence, split_span
 from .resources import entity_dictionary
 from .schemas import MENTIONS
 
@@ -41,7 +41,7 @@ def _remap_id(prefix: str, old: str) -> str:
 
 def _extract_base(sent_text: str, dictionary) -> list[dict]:
     # annotation is re-derived here (~0.04 ms/sentence) instead of being
-    # shipped as nested Arrow columns — see annotate.split_sentences_df.
+    # shipped as nested Arrow columns between stages.
     # emit_generic=True: the Spark path extracts per sentence, so an
     # anaphor whose antecedent sits in a previous sentence becomes a
     # Generic_* placeholder for the doc-level coref sieves (reach_spark
@@ -72,38 +72,19 @@ def _rescope(base: list[dict], doc_id: str, sent_idx: int) -> list[dict]:
     return rows
 
 
-def extract_mentions(sentences: DataFrame) -> DataFrame:
-    dictionary = entity_dictionary()
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, list[dict]] = {}
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                base = cache.get(rec.sent_text)
-                if base is None:
-                    base = _extract_base(rec.sent_text, dictionary)
-                    if len(cache) < _CACHE_MAX:
-                        cache[rec.sent_text] = base
-                rows.extend(_rescope(base, rec.doc_id, rec.sent_idx))
-            yield pd.DataFrame(rows, columns=_MENTION_COLS)
-
-    return sentences.mapInPandas(gen, schema=MENTIONS)
-
-
-def extract_document_mentions(documents: DataFrame) -> DataFrame:
-    """The FUSED hot path: documents(doc_id, spans) → mention rows in ONE
-    mapInPandas stage — span ordering, sentence split, pass-1 extraction,
-    and the doc-level alias-instance rescan (G6) all happen inside the UDF.
+def extract_document_mentions(documents: DataFrame,
+                              vocabulary: tuple | None = ()) -> DataFrame:
+    """The FUSED hot path and the only mention extractor:
+    documents(doc_id, spans) → mention rows in ONE mapInPandas stage —
+    span ordering, sentence split, pass-1 extraction, and the doc-level
+    alias-instance rescan (G6) all happen inside the UDF.
 
     Why fused: a document row already carries every span of the doc, so
     the doc-local InstanceFinder rescan needs NO shuffle, NO broadcast
-    join, and NO second UDF stage — the unfused path
-    (split_sentences_df → extract_mentions → propagate_alias_instances)
-    chained two Python workers with an Arrow hop between them plus two
-    persists and a broadcast join, which dominated the measured scaling
-    curve. Corpus-wide alias mode still uses the unfused path (it
-    genuinely needs a global barrier).
+    join, and NO second UDF stage. `vocabulary` — (text, label,
+    canonical) alias instances — is added to every document's own
+    instances before the rescan; `None` skips the rescan and returns the
+    pass-1 rows. Both serve rescan_corpus_aliases.
 
     Skew: the work unit is one document (like the reference's per-paper
     loop, ReachCLI.scala:43-153). Sentence-level extraction is memoized
@@ -111,6 +92,7 @@ def extract_document_mentions(documents: DataFrame) -> DataFrame:
     a pathological mega-document serializes on one task — pre-split such
     docs upstream (the 1000-sentence-per-span guard bounds the damage)."""
     dictionary = entity_dictionary()
+    seed = None if vocabulary is None else {tuple(v) for v in vocabulary}
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         split_cache: dict[str, list[str]] = {}
@@ -126,11 +108,7 @@ def extract_document_mentions(documents: DataFrame) -> DataFrame:
                 for pos, s in enumerate(tspans):
                     ss = split_cache.get(s["text"])
                     if ss is None:
-                        ss = split_sentences(s["text"])
-                        if len(ss) >= 1000:
-                            raise ValueError(
-                                f"span yields {len(ss)} sentences (>= "
-                                "1000); sent_idx encoding would collide")
+                        ss = split_span(s["text"])
                         if len(split_cache) < _CACHE_MAX:
                             split_cache[s["text"]] = ss
                     sents.extend((pos * 1000 + li, t)
@@ -144,11 +122,11 @@ def extract_document_mentions(documents: DataFrame) -> DataFrame:
                             cache1[stext] = base
                     per_sent.append((si, stext, base))
                 # doc-level alias instances (InstanceFinder rescan, G6):
-                # identical semantics to propagate_alias_instances —
                 # extras = sorted distinct instances minted anywhere in
-                # the doc; only sentences containing an instance text are
-                # re-extracted, memoized on (sentence, extras)
-                extras = tuple(sorted({
+                # the doc, plus the seeded vocabulary; only sentences
+                # containing an instance text are re-extracted, memoized
+                # on (sentence, extras)
+                extras = () if seed is None else tuple(sorted(seed | {
                     (m["text"], m["label"], m["canonical"])
                     for _, _, base in per_sent for m in base
                     if str(m.get("found_by", "")).startswith(
@@ -184,73 +162,32 @@ def extract_document_mentions(documents: DataFrame) -> DataFrame:
     return docs.mapInPandas(gen, schema=MENTIONS)
 
 
-def alias_instance_table(mentions: DataFrame) -> DataFrame:
-    """[G6] InstanceFinder vocabulary (coref/Alias.scala:12-75): entity
-    names minted by alias constructions ('Akt1 (a.k.a. AktTR)'). Bounded by
-    the alias vocabulary of the corpus — dimension-table sized, broadcast
-    below."""
-    from pyspark.sql import functions as F
-    return (mentions
-            .where(F.col("found_by").startswith("alias-instance"))
-            .select("doc_id", F.col("text").alias("i_text"),
-                    F.col("label").alias("i_label"),
-                    F.col("canonical").alias("i_canonical"))
-            .distinct())
+def rescan_corpus_aliases(documents: DataFrame,
+                          first: DataFrame) -> DataFrame:
+    """Corpus-wide alias instance propagation: names minted by an alias
+    construction in one document become dictionary entries for every
+    document (reference ReachSystem.extractFrom(Seq(doc1, doc2)) sharing
+    aliases across papers, TestCoreference sent61).
 
-
-def propagate_alias_instances(sentences: DataFrame, mentions: DataFrame,
-                              corpus_level: bool = False) -> DataFrame:
-    """Doc-wide (or corpus-wide) alias instance propagation: names minted
-    by an alias construction in one sentence become dictionary entries for
-    EVERY sentence of the document (reference InstanceFinder rescan,
-    coref/Alias.scala:12-75; corpus mode = ReachSystem.extractFrom(Seq(
-    doc1, doc2)) sharing aliases across papers, TestCoreference sent61).
-
-    Spark shape: the instance vocabulary is tiny → broadcast hash join on
-    doc_id; only sentences whose token array overlaps an instance name
-    (arrays_overlap, evaluated JVM-side) are re-extracted with the extended
-    dictionary; everything else keeps its pass-1 mentions via a broadcast
-    anti-join. Re-extraction is memoized per (sentence, extras) like
-    pass 1."""
-    from pyspark.sql import functions as F
-
-    inst = alias_instance_table(mentions)
-    if corpus_level:
-        docs = sentences.select("doc_id").distinct()
-        inst = docs.crossJoin(
-            F.broadcast(inst.drop("doc_id").distinct()))
-    per_doc = (inst.groupBy("doc_id")
-               .agg(F.collect_list(
-                   F.struct("i_text", "i_label", "i_canonical"))
-                   .alias("extras")))
-    cand = (sentences.join(F.broadcast(per_doc), "doc_id")
-            .where(F.expr(
-                "exists(extras, x -> instr(sent_text, x.i_text) > 0)")))
-
-    dictionary = entity_dictionary()
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[tuple, list[dict]] = {}
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                extras = tuple(sorted({
-                    (e["i_text"], e["i_label"], e["i_canonical"])
-                    for e in rec.extras}))
-                key = (rec.sent_text, extras)
-                base = cache.get(key)
-                if base is None:
-                    d = dict(dictionary)
-                    for t, lab, canon in extras:
-                        d.setdefault(t.lower(), (lab, canon))
-                    base = _extract_base(rec.sent_text, d)
-                    if len(cache) < _CACHE_MAX:
-                        cache[key] = base
-                rows.extend(_rescope(base, rec.doc_id, rec.sent_idx))
-            yield pd.DataFrame(rows, columns=_MENTION_COLS)
-
-    rescanned = cand.mapInPandas(gen, schema=MENTIONS)
-    keys = cand.select("doc_id", "sent_idx")
-    kept = mentions.join(F.broadcast(keys), ["doc_id", "sent_idx"],
-                         "left_anti")
-    return kept.unionByName(rescanned)
+    `first` is extract_document_mentions(documents, vocabulary=None):
+    the pass-1 rows, which still carry the alias-instance mentions that a
+    rescan re-finds as plain dictionary hits. Their vocabulary is bounded
+    by the corpus's alias constructions — dimension-table sized — so it
+    is collected to the driver. Only documents whose text spans contain a
+    vocabulary text are re-extracted, with the vocabulary seeded into
+    their rescan. Every other document has no alias instance of its own,
+    so its pass-1 rows are final; they are kept via a broadcast anti-join
+    on doc_id."""
+    vocab = tuple(sorted({
+        tuple(r) for r in first
+        .where(F.col("found_by").startswith("alias-instance"))
+        .select("text", "label", "canonical").distinct().collect()}))
+    if not vocab:
+        return first
+    texts = F.array(*[F.lit(t) for t in sorted({t for t, _, _ in vocab})])
+    hit = documents.where(F.exists(
+        "spans", lambda s: (s["kind"] == "text") &
+        F.exists(texts, lambda t: s["text"].contains(t))))
+    kept = first.join(F.broadcast(hit.select("doc_id")), "doc_id",
+                      "left_anti")
+    return kept.unionByName(extract_document_mentions(hit, vocab))

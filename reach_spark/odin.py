@@ -509,9 +509,6 @@ class TokenRuleEngine:
         self.start_word_re = self._combined_start_re()
         self._start_cache: dict[str, bool] = {}
         self._cand_cache: dict[str, tuple[TokenRule, ...]] = {}
-        # rules whose entry gate is NOT a pure function of the word must
-        # always be probed; word-only rules are filtered per word below
-        self._always = tuple(r for r in rules if not r._first_word_only)
 
     def candidates(self, word: str) -> tuple[TokenRule, ...]:
         """The ordered subset of rules whose entry gate can pass at a

@@ -419,6 +419,7 @@ def dep_event_matches(doc_id: str, sent_idx: int, text: str,
     pseudo-mention labeled ModificationTrigger so the rules' faithful
     `!mention=ModificationTrigger` constraint (simple-event_template.yml
     trigger line) excludes them, exactly as the reference grammar does."""
+    from .deps import light_deps
     from .extract import annotate_sentence, SentenceExtractor
     ann = annotate_sentence(text)
     ex = SentenceExtractor(doc_id, sent_idx, ann, dictionary)
@@ -429,8 +430,9 @@ def dep_event_matches(doc_id: str, sent_idx: int, text: str,
                          "start": t, "end": t + 1,
                          "text": ann["words"][t]})
     eng = engine or default_engine()
+    deps = light_deps(ann["words"], ann["tags"], ann["lemmas"])
     matches = eng.match_sentence(ann["words"], ann["tags"], ann["lemmas"],
-                                 ann["deps"], mentions)
+                                 deps, mentions)
     return _reach_postpass(matches, ann["words"])
 
 

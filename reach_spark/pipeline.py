@@ -20,20 +20,18 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .annotate import annotate_sentences, media_spans, split_sentences_df
+from .annotate import annotate_sentences, media_spans
 from .canonicalize import canonical_entities
 from .context_ops import assign_context
 from .coref import coref_links, resolve_mentions
 from .grounding import ground_map, kb_dataframe
-from .mentions import (extract_document_mentions, extract_mentions,
-                       propagate_alias_instances)
+from .mentions import extract_document_mentions, rescan_corpus_aliases
 from .triples import assemble_triples, build_triple_occurrences
 
 
 def extract_dataframe(spark: SparkSession, documents: DataFrame,
                       with_coref: bool = True,
                       persist: bool = True,
-                      alias_propagation: bool = True,
                       corpus_aliases: bool = False,
                       adhoc_kb: DataFrame | None = None,
                       max_doc_spans: int | None = None,
@@ -48,13 +46,15 @@ def extract_dataframe(spark: SparkSession, documents: DataFrame,
     production scale this is the intermediate Iceberg `mentions` table
     (SURVEY §2.1 S4 resume point).
 
-    `alias_propagation` runs the doc-wide InstanceFinder rescan (G6) —
-    FUSED into the single extraction UDF (extract_document_mentions): a
-    document row carries all its spans, so the doc-local rescan needs no
-    joins or extra stages. `corpus_aliases=True` extends the rescan
-    corpus-wide (reference extractFrom(Seq(docs)), TestCoreference
-    sent61); that mode genuinely needs a global barrier, so it uses the
-    unfused two-pass path (pass-1 + broadcast-join rescan)."""
+    Mentions come from ONE fused extraction UDF
+    (extract_document_mentions), which includes the doc-wide
+    InstanceFinder rescan (G6): a document row carries all its spans, so
+    the doc-local rescan needs no joins or extra stages.
+    `corpus_aliases=True` extends the rescan corpus-wide (reference
+    extractFrom(Seq(docs)), TestCoreference sent61): the alias vocabulary
+    of a pass-1 run of the same UDF is collected, and only the documents
+    that contain a vocabulary text are re-run with it
+    (mentions.rescan_corpus_aliases)."""
     if max_doc_spans:
         # Pathological-document guard (the doc-level analog of the
         # reference's 100-token sentence parse cap, BioNLPProcessor.scala:
@@ -69,24 +69,19 @@ def extract_dataframe(spark: SparkSession, documents: DataFrame,
         documents = documents.withColumn(
             "spans", F.slice("spans", 1, max_doc_spans))
     _extra_persisted: list[DataFrame] = []
-    if alias_propagation and not corpus_aliases:
+    if not corpus_aliases:
         # hot path: ONE mapInPandas stage does span-order → sentence split
         # → extraction → doc-level alias rescan
         mentions = extract_document_mentions(documents)
-    elif alias_propagation:
-        sentences_light = split_sentences_df(documents)
-        base = extract_mentions(sentences_light)
-        if persist:
-            # the rescan references both a second time; persist only when
-            # the caller opted in (long-lived sessions with persist=False
-            # must not accumulate cached blocks)
-            sentences_light = sentences_light.persist()
-            base = base.persist()
-            _extra_persisted.extend([sentences_light, base])
-        mentions = propagate_alias_instances(sentences_light, base,
-                                             corpus_level=True)
     else:
-        mentions = extract_mentions(split_sentences_df(documents))
+        first = extract_document_mentions(documents, vocabulary=None)
+        if persist:
+            # the vocabulary collect and the anti-join both read the first
+            # pass; persist only when the caller opted in (long-lived
+            # sessions with persist=False must not accumulate cached blocks)
+            first = first.persist()
+            _extra_persisted.append(first)
+        mentions = rescan_corpus_aliases(documents, first)
     if persist:
         # ALWAYS eager for mentions (even under eager_persist=False): the
         # downstream AQE jobs and broadcast builds launch CONCURRENTLY,

@@ -10,7 +10,7 @@ Commands:
   :help            show commands
   :triples on|off  also print the flattened (subj, pred, obj) triples
   :format FMT      print the serialized result instead (fries, indexcard,
-                   serial-json, arizona, bel, biopax, brat) — the
+                   serial-json, arizona, cmu, bel, biopax, brat) — the
                    api.annotate_text formats; `:format off` reverts
   :exit            exit
 
@@ -30,7 +30,8 @@ commands:
   :help            show commands
   :triples on|off  toggle printing flattened triples (default off)
   :format FMT      print serialized output instead (fries, indexcard,
-                   serial-json, arizona, bel, biopax, brat); :format off
+                   serial-json, arizona, cmu, bel, biopax, brat);
+                   :format off
   :exit            exit
 anything else is extracted and displayed per sentence"""
 
@@ -91,20 +92,22 @@ class ReachShell:
         from .pipeline import extract_dataframe
         res = extract_dataframe(self.spark,
                                 text_documents(self.spark, text, doc_id))
-        blocks = [r.summary for r in
-                  (summarize_mentions(res["resolved_mentions"],
-                                      res["sentences"])
-                   .orderBy("doc_id", "sent_idx").collect())]
-        out = "\n".join(blocks)
-        if self.show_triples:
-            trips = res["triples"].orderBy("pred", "obj").collect()
-            lines = [f"  ({t['subj']}, {t['pred']}, {t['obj']})"
-                     + (" [negated]" if t["negated"] else "")
-                     for t in trips]
-            out += "\nTRIPLES: " + str(len(trips))
-            if lines:
-                out += "\n" + "\n".join(lines)
-        res.cleanup()
+        try:
+            blocks = [r.summary for r in
+                      (summarize_mentions(res["resolved_mentions"],
+                                          res["sentences"])
+                       .orderBy("doc_id", "sent_idx").collect())]
+            out = "\n".join(blocks)
+            if self.show_triples:
+                trips = res["triples"].orderBy("pred", "obj").collect()
+                lines = [f"  ({t['subj']}, {t['pred']}, {t['obj']})"
+                         + (" [negated]" if t["negated"] else "")
+                         for t in trips]
+                out += "\nTRIPLES: " + str(len(trips))
+                if lines:
+                    out += "\n" + "\n".join(lines)
+        finally:
+            res.cleanup()
         return out
 
 

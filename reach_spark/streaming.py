@@ -360,7 +360,13 @@ def stream_sessionize(spark: SparkSession, input_dir: str, out_dir: str,
     `read_sessions` reconstructs the current session table. In-order
     arrival per user within the watermark horizon is assumed (the
     standard session-window contract; later-than-watermark events are
-    dropped by the engine)."""
+    dropped by the engine).
+
+    Precondition: `watermark` <= the 30-minute session gap
+    (_SESS_GAP_US). The min/max fold in _session_update matches the
+    batch sessionizer only then: with a wider watermark, a late event
+    older than the open session's start minus the gap would merge into
+    that session, where relational.sessionize_events splits it off."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     ev = (spark.readStream.schema(

@@ -320,3 +320,59 @@ def test_max_doc_spans_guard(spark):
     n_exact = (exact["mentions"].where("kind = 'tbm'")
                .where("doc_id = 'big'").count())
     assert n_exact == 30 * per_doc["small"] / 2  # default: no cap
+
+
+def test_span_sentence_guard(spark):
+    """sent_idx = span_pos * 1000 + index in span: a span of 1000 or
+    more sentences would collide, so the one split_span guard raises —
+    called directly and inside the fused extraction UDF alike."""
+    from pyspark.errors import PythonException
+
+    from reach_spark.extract import split_span
+    from reach_spark.mentions import extract_document_mentions
+    assert len(split_span("Ras binds MEK. " * 999)) == 999
+    text = "Ras binds MEK. " * 1000
+    with pytest.raises(ValueError, match="sent_idx encoding would collide"):
+        split_span(text)
+    docs = spark.createDataFrame([Row(doc_id="mega", spans=[
+        Row(kind="text", text=text, media_ref="", offset=0)])])
+    with pytest.raises(PythonException,
+                       match="sent_idx encoding would collide"):
+        extract_document_mentions(docs).collect()
+
+
+# sha256 of the canonical JSON of mentions._extract_base over every
+# fixture sentence, recorded while annotate_sentence still computed the
+# light dependency parse for the negation check
+_FIXTURE_BASE_SHA256 = ("ceab003e3c9b76d42d041be278886396"
+                        "ddfed4484f0243652605fc16cdf17a07")
+
+
+def test_extraction_never_parses(spark, monkeypatch):
+    """The light dependency parse feeds only the sentences table and the
+    O2 dependency rules. Mention extraction never calls it, and its
+    output is unchanged from when it parsed every sentence."""
+    import hashlib
+    import json
+
+    from reach_spark import deps
+    from reach_spark.fixtures import fixture_sentences
+    from reach_spark.mentions import _extract_base
+    from reach_spark.resources import entity_dictionary
+
+    def no_parse(*_args):
+        raise AssertionError("light_deps called during mention extraction")
+
+    monkeypatch.setattr(deps, "light_deps", no_parse)
+    dictionary = entity_dictionary()
+    base = [_extract_base(s, dictionary) for s in fixture_sentences()]
+    blob = json.dumps(base, sort_keys=True, default=str).encode()
+    assert hashlib.sha256(blob).hexdigest() == _FIXTURE_BASE_SHA256
+    # the patch reaches this driver process only (Spark's Python workers
+    # import their own reach_spark): planning and collecting the pipeline
+    # must not parse driver-side
+    docs = spark.createDataFrame([Row(doc_id="np", spans=[
+        Row(kind="text", text="MEK does not inhibit ERK.", media_ref="",
+            offset=0)])])
+    res = extract_dataframe(spark, docs, with_coref=False, persist=False)
+    assert any(t["negated"] for t in res["triples"].collect())
