@@ -5,23 +5,26 @@ FriesEntry.scala:22-32) is pure JVM-side column work — filter/sort/concat on
 the spans array stays in whole-stage codegen; only the tokenize/tag step
 drops to an Arrow-batched pandas UDF (SURVEY §2.2 N1-N4).
 
-Skew: a long-tail doc with hundreds of text spans explodes into hundreds of
-independent sentence rows, so compute skew is dissolved by the explode +
-round-robin repartition on (doc_id, sent_idx) — the salted-repartition story
-of SURVEY §4 (the salt is the sentence index itself).
+Per-span operators (the `sentences` table here, and the N5/O1/O2/P2
+seen-count queries) all run through `span_rows`: the text spans explode into
+one row each, so a long-tail doc with hundreds of spans becomes hundreds of
+independent rows, and one Arrow-batched mapInPandas computes each distinct
+span text once per partition (dedupe-before-compute, SURVEY §4).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from .deps import light_deps
 from .extract import annotate_sentence, split_span
 from .schemas import SENTENCES
+
+MEMO_MAX = 100_000  # per-partition bound on memoized distinct texts
 
 
 def extract_text(documents: DataFrame) -> DataFrame:
@@ -75,95 +78,74 @@ def media_spans(documents: DataFrame) -> DataFrame:
     )
 
 
-def split_sentences_df(documents: DataFrame,
-                       partitions: int | None = None) -> DataFrame:
-    """Light sentence rows (doc_id, sent_idx, sent_text) for consumers
-    that read only the sentence text (fries.sentence_frames).
+def span_rows(documents: DataFrame, span_fn: Callable[[str], list[tuple]],
+              schema: str | T.StructType) -> DataFrame:
+    """documents → (doc_id, span_pos, *schema) rows: every row that
+    `span_fn(span_text)` returns for a non-empty text span, prefixed with
+    the span's (doc_id, span_pos).
 
-    Carries NO token arrays. The extraction hot path does not read this
-    table either: mentions.extract_document_mentions splits and annotates
-    inside its own UDF, because shipping five nested array columns through
-    Arrow between stages costs ~40x more than recomputing them. The fully
-    annotated `sentences` table (annotate_sentences) is produced once as
-    the S4 resume artifact, not as an inter-stage exchange format."""
-    spans = text_spans(documents)
-    if partitions:
-        spans = spans.repartition(partitions, "doc_id", "span_pos")
+    The one per-span Spark shape: `text_spans` → ONE Arrow-batched
+    mapInPandas in which `span_fn`, a pure function of the span text, runs
+    once per distinct span text per partition (memo bounded by MEMO_MAX),
+    so duplicated content costs a dict probe. `span_fn` ships with the
+    task closure, together with whatever it captures."""
+    fields = (T.StructType.fromDDL(schema) if isinstance(schema, str)
+              else schema).fields
+    out = T.StructType([T.StructField("doc_id", T.StringType(), False),
+                        T.StructField("span_pos", T.IntegerType(), False),
+                        *fields])
+    cols = out.fieldNames()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, list[str]] = {}
+        memo: dict[str, list[tuple]] = {}
         for pdf in batches:
             rows = []
             for doc_id, span_pos, text in zip(
                     pdf["doc_id"], pdf["span_pos"], pdf["span_text"]):
                 if not text:
                     continue
-                base = cache.get(text)
-                if base is None:
-                    base = split_span(text)
-                    if len(cache) < 100_000:
-                        cache[text] = base
-                for li, sent in enumerate(base):
-                    rows.append({"doc_id": doc_id,
-                                 "sent_idx": int(span_pos) * 1000 + li,
-                                 "sent_text": sent})
-            yield pd.DataFrame(rows,
-                               columns=["doc_id", "sent_idx", "sent_text"])
+                res = memo.get(text)
+                if res is None:
+                    res = span_fn(text)
+                    if len(memo) < MEMO_MAX:
+                        memo[text] = res
+                key = (doc_id, int(span_pos))
+                rows.extend(key + r for r in res)
+            yield pd.DataFrame(rows, columns=cols)
 
-    return spans.mapInPandas(
-        gen, schema="doc_id string, sent_idx int, sent_text string")
+    return text_spans(documents).mapInPandas(gen, schema=out)
 
 
-def annotate_sentences(documents: DataFrame,
-                       partitions: int | None = None) -> DataFrame:
+_ANNOTATED = T.StructType([T.StructField("li", T.IntegerType(), False),
+                           *SENTENCES.fields[2:]])
+
+
+def annotate_span(span_text: str) -> list[tuple]:
+    """One `_ANNOTATED` row per sentence of a text span: its index `li` in
+    the span, then the SENTENCES fields after (doc_id, sent_idx)."""
+    rows = []
+    for li, sent in enumerate(split_span(span_text)):
+        ann = annotate_sentence(sent)
+        words = ann["words"]
+        deps = light_deps(words, ann["tags"], ann["lemmas"])
+        rows.append((li, sent, words, ann["start_offsets"],
+                     ann["end_offsets"], ann["tags"], ann["lemmas"],
+                     ["O"] * len(words),
+                     [{"src": s, "dst": d, "label": lbl}
+                      for s, d, lbl in deps]))
+    return rows
+
+
+def annotate_sentences(documents: DataFrame) -> DataFrame:
     """documents → SENTENCES rows (tokenized, tagged, lemmatized, with the
     light dependency edges of reach_spark.deps).
 
     Sentence index is global per document: span_pos * 1000 + local sentence
-    index keeps ordering without a per-doc shuffle (bounded: sentences per
-    span << 1000 under the 100-token parse guard).
+    index keeps ordering without a per-doc shuffle (split_span fails a span
+    of 1000 sentences or more rather than let the indexes collide).
     """
-    spans = text_spans(documents)
-    if partitions:
-        spans = spans.repartition(partitions, "doc_id", "span_pos")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # annotation is a pure function of the span text — memoize per
-        # partition (dedupe-before-compute; see reach_spark.mentions)
-        cache: dict[str, list[dict]] = {}
-        for pdf in batches:
-            rows = []
-            for doc_id, span_pos, text in zip(
-                    pdf["doc_id"], pdf["span_pos"], pdf["span_text"]):
-                if not text:
-                    continue
-                base = cache.get(text)
-                if base is None:
-                    base = []
-                    for li, sent in enumerate(split_span(text)):
-                        ann = annotate_sentence(sent)
-                        deps = light_deps(ann["words"], ann["tags"],
-                                          ann["lemmas"])
-                        base.append({
-                            "li": li,
-                            "sent_text": sent,
-                            "words": ann["words"],
-                            "start_offsets": ann["start_offsets"],
-                            "end_offsets": ann["end_offsets"],
-                            "tags": ann["tags"],
-                            "lemmas": ann["lemmas"],
-                            "entities": ["O"] * len(ann["words"]),
-                            "deps": [{"src": s, "dst": d, "label": lbl}
-                                     for s, d, lbl in deps],
-                        })
-                    if len(cache) < 100_000:
-                        cache[text] = base
-                for b in base:
-                    row = dict(b)
-                    row.pop("li")
-                    row["doc_id"] = doc_id
-                    row["sent_idx"] = int(span_pos) * 1000 + b["li"]
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in SENTENCES.fields])
-
-    return spans.mapInPandas(gen, schema=SENTENCES)
+    rows = span_rows(documents, annotate_span, _ANNOTATED)
+    return rows.select(
+        "doc_id",
+        (F.col("span_pos") * 1000 + F.col("li")).alias("sent_idx"),
+        *SENTENCES.fieldNames()[2:])

@@ -15,10 +15,10 @@ weights as `_crf_weights.py` (the generated-artifact pattern of
 shape/affix/context features (e.g. novel camel-case symbols the
 dictionary lacks), unlike the pure longest-match dictionary pass.
 
-Spark shape (crf_ner_df): span explode → ONE Arrow-batched mapInPandas,
-memoized per distinct span text — identical to the other extraction
-queries, so the oracle is the per-fixture expected-row recomposition
-(tools/gen_kg_oracle.py calls the same `crf_rows`)."""
+Spark shape (crf_ner_df): `annotate.span_rows` over the span function
+`crf_span_rows`, then a hash aggregate; the oracle is the per-fixture
+expected-row recomposition (tools/gen_kg_oracle.py calls the same
+`crf_span_rows`)."""
 
 from __future__ import annotations
 
@@ -148,48 +148,27 @@ def crf_rows(sent_text: str) -> list[tuple]:
             for s, e, lab in decode_entities(words, tags)]
 
 
+def crf_span_rows(span_text: str) -> list[tuple]:
+    """crf_rows for every sentence of one text span, start and end
+    shifted by sentence index * 1000 — the span function of crf_ner_df."""
+    from .extract import split_sentences
+    return [(lab, si * 1000 + s, si * 1000 + e, txt)
+            for si, sent in enumerate(split_sentences(span_text))
+            for lab, s, e, txt in crf_rows(sent)]
+
+
 def crf_ner_df(documents) -> "DataFrame":  # noqa: F821
     """[N5] Corpus-wide CRF-NER table over interleaved documents: one row
-    per distinct (label, start, end, text) with corpus SEEN count.
-    Spark shape: span explode → Arrow-batched mapInPandas memoized per
-    distinct span text → hash aggregate with map-side combine."""
-    from collections.abc import Iterator
-
-    import pandas as pd
+    per distinct (label, start, end, text) with corpus SEEN count."""
     from pyspark.sql import functions as F
 
-    from .annotate import text_spans
+    from .annotate import span_rows
 
-    spans = text_spans(documents)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .extract import split_sentences
-        memo: dict[str, list[tuple]] = {}
-        cols = ["doc_id", "label", "start", "end", "text"]
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["span_text"]):
-                if not text:
-                    continue
-                res = memo.get(text)
-                if res is None:
-                    res = []
-                    for si, sent in enumerate(split_sentences(text)):
-                        res.extend((r[0], si * 1000 + r[1],
-                                    si * 1000 + r[2], r[3])
-                                   for r in crf_rows(sent))
-                    if len(memo) < 100_000:
-                        memo[text] = res
-                for r in res:
-                    rows.append((doc_id,) + r)
-            yield pd.DataFrame(rows, columns=cols)
-
-    ev = spans.mapInPandas(
-        gen, schema="doc_id string, label string, start int, end int, "
-                    "text string")
+    ev = span_rows(documents, crf_span_rows,
+                   "label string, start int, end int, text string")
     return (ev.groupBy("label", "start", "end", "text")
               .agg(F.count("*").alias("seen")))
 
 
 __all__ = ["word_shape", "token_features", "viterbi", "decode_entities",
-           "crf_rows", "crf_ner_df", "O_TAG"]
+           "crf_rows", "crf_span_rows", "crf_ner_df", "O_TAG"]

@@ -4547,47 +4547,30 @@ def o1_rows(sent_text: str,
     return out
 
 
+def o1_span_rows(span_text: str,
+                 dictionary: dict[str, tuple[str, ...]]) -> list[tuple]:
+    """o1_rows for every sentence of one text span, start and end shifted
+    by sentence index * 1000 — the span function of token_rules_df."""
+    return [(rule, lab, si * 1000 + s, si * 1000 + e, txt, canon)
+            for si, sent in enumerate(split_sentences(span_text))
+            for rule, lab, s, e, txt, canon in o1_rows(sent, dictionary)]
+
+
 def token_rules_df(documents) -> "DataFrame":  # noqa: F821
     """[O1] Corpus-wide token-rule mention table over interleaved
     documents: one row per distinct (rule, label, start, end, text,
-    canonical) with corpus SEEN count. Spark shape: span explode →
-    Arrow-batched mapInPandas memoized per distinct span text → hash
-    aggregate with map-side combine."""
-    from collections.abc import Iterator
+    canonical) with corpus SEEN count. Spark shape: annotate.span_rows
+    over o1_span_rows, then a hash aggregate with map-side combine."""
+    from functools import partial
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from .annotate import text_spans
+    from .annotate import span_rows
     from .resources import entity_dictionary
 
-    spans = text_spans(documents)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dictionary = entity_dictionary()
-        memo: dict[str, list[tuple]] = {}
-        cols = ["doc_id", "rule", "label", "start", "end", "text",
-                "canonical"]
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["span_text"]):
-                if not text:
-                    continue
-                res = memo.get(text)
-                if res is None:
-                    res = []
-                    for si, sent in enumerate(split_sentences(text)):
-                        res.extend((r[0], r[1], si * 1000 + r[2],
-                                    si * 1000 + r[3], r[4], r[5])
-                                   for r in o1_rows(sent, dictionary))
-                    if len(memo) < 100_000:
-                        memo[text] = res
-                for r in res:
-                    rows.append((doc_id,) + r)
-            yield pd.DataFrame(rows, columns=cols)
-
-    ev = spans.mapInPandas(
-        gen, schema="doc_id string, rule string, label string, start int, "
-                    "end int, text string, canonical string")
+    ev = span_rows(documents,
+                   partial(o1_span_rows, dictionary=entity_dictionary()),
+                   "rule string, label string, start int, end int, "
+                   "text string, canonical string")
     return (ev.groupBy("rule", "label", "start", "end", "text", "canonical")
               .agg(F.count("*").alias("seen")))

@@ -27,12 +27,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from .annotate import MEMO_MAX
 from .extract import SentenceExtractor, annotate_sentence, split_span
 from .resources import entity_dictionary
 from .schemas import MENTIONS
 
 _MENTION_COLS = [f.name for f in MENTIONS.fields]
-_CACHE_MAX = 100_000  # per-partition distinct-sentence memo bound
 
 
 def _remap_id(prefix: str, old: str) -> str:
@@ -109,7 +109,7 @@ def extract_document_mentions(documents: DataFrame,
                     ss = split_cache.get(s["text"])
                     if ss is None:
                         ss = split_span(s["text"])
-                        if len(split_cache) < _CACHE_MAX:
+                        if len(split_cache) < MEMO_MAX:
                             split_cache[s["text"]] = ss
                     sents.extend((pos * 1000 + li, t)
                                  for li, t in enumerate(ss))
@@ -118,7 +118,7 @@ def extract_document_mentions(documents: DataFrame,
                     base = cache1.get(stext)
                     if base is None:
                         base = _extract_base(stext, dictionary)
-                        if len(cache1) < _CACHE_MAX:
+                        if len(cache1) < MEMO_MAX:
                             cache1[stext] = base
                     per_sent.append((si, stext, base))
                 # doc-level alias instances (InstanceFinder rescan, G6):
@@ -142,7 +142,7 @@ def extract_document_mentions(documents: DataFrame,
                             for t, lab, canon in extras:
                                 d.setdefault(t.lower(), (lab, canon))
                             b2 = _extract_base(stext, d)
-                            if len(cache2) < _CACHE_MAX:
+                            if len(cache2) < MEMO_MAX:
                                 cache2[key] = b2
                         per_sent[i] = (si, stext, b2)
                 for si, _stext, base in per_sent:

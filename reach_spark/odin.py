@@ -270,11 +270,14 @@ def _eval_expr(expr, token_fields: dict[str, Any]) -> bool:
 # Instructions: ("match", expr, next) consumes one token;
 # ("split", a, b) / ("jump", t) are epsilon moves; ("look", program,
 # ahead, positive, next) is a zero-width sub-VM run; ("accept",).
+# Graph paths (odin_graph) share the construction: ("edge", dir, matcher,
+# next) consumes one dependency edge, ("node", expr, next) is a zero-width
+# token test.
 
 @dataclass
 class _Frag:
     start: int
-    outs: list[tuple[int, int]]     # (instr index, slot 1|2) to patch
+    outs: list[tuple[int, int]]     # (instr index, next slot) to patch
 
 
 class _Builder:
@@ -287,9 +290,12 @@ class _Builder:
 
     def build(self, node) -> _Frag:
         kind = node[0]
-        if kind == "tok":
-            i = self.emit(["match", node[1], -1])
+        if kind in ("tok", "node"):
+            i = self.emit(["match" if kind == "tok" else "node", node[1], -1])
             return _Frag(i, [(i, 2)])
+        if kind == "step":
+            i = self.emit(["edge", node[1], node[2], -1])
+            return _Frag(i, [(i, 3)])
         if kind == "seq":
             frags = [self.build(n) for n in node[1]]
             if not frags:
@@ -330,11 +336,7 @@ class _Builder:
             return _Frag(frags[0].start, frags[-1].outs)
         if kind == "look":
             _, inner, ahead, positive = node
-            sub = _Builder()
-            f = sub.build(inner)
-            acc = sub.emit(["accept"])
-            sub._patch(f.outs, acc)
-            i = self.emit(["look", (sub.prog, f.start), ahead, positive, -1])
+            i = self.emit(["look", _compile(inner), ahead, positive, -1])
             return _Frag(i, [(i, 4)])
         raise AssertionError(kind)
 
@@ -343,13 +345,17 @@ class _Builder:
             self.prog[idx][slot] = target
 
 
-def _compile_pattern(src: str):
-    ast = _Parser(_lex(src)).parse()
+def _compile(ast):
+    """AST → (program, start pc)."""
     b = _Builder()
     frag = b.build(ast)
     acc = b.emit(["accept"])
     b._patch(frag.outs, acc)
     return b.prog, frag.start
+
+
+def _compile_pattern(src: str):
+    return _compile(_Parser(_lex(src)).parse())
 
 
 def _run(prog, start_pc: int, fields: list[dict[str, Any]],

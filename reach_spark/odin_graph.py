@@ -37,7 +37,7 @@ from dataclasses import dataclass, field as dc_field
 from typing import Any
 import re
 
-from .odin import (Pred, TokenRule, _eval_expr, _lex, _Parser,
+from .odin import (Pred, TokenRule, _compile, _eval_expr, _lex, _Parser,
                    _compile_re, _unquote)
 
 # ---------------------------------------------------------------------------
@@ -88,89 +88,11 @@ class _PathParser(_Parser):
         raise ValueError(f"odin path: unexpected {kind} {val!r}")
 
 
-# ---------------------------------------------------------------------------
-# Thompson construction (graph edition)
-# Instructions: ["edge", dir, matcher|None, next] consumes one dep edge;
-# ["node", expr, next] zero-width token test; ["split", a, b];
-# ["jump", t]; ["accept"].
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class _Frag:
-    start: int
-    outs: list[tuple[int, int]]
-
-
-class _GraphBuilder:
-    def __init__(self):
-        self.prog: list[list] = []
-
-    def emit(self, instr: list) -> int:
-        self.prog.append(instr)
-        return len(self.prog) - 1
-
-    def build(self, node) -> _Frag:
-        kind = node[0]
-        if kind == "step":
-            i = self.emit(["edge", node[1], node[2], -1])
-            return _Frag(i, [(i, 3)])
-        if kind == "node":
-            i = self.emit(["node", node[1], -1])
-            return _Frag(i, [(i, 2)])
-        if kind == "seq":
-            frags = [self.build(n) for n in node[1]]
-            if not frags:
-                i = self.emit(["jump", -1])
-                return _Frag(i, [(i, 1)])
-            for a, b in zip(frags, frags[1:]):
-                self._patch(a.outs, b.start)
-            return _Frag(frags[0].start, frags[-1].outs)
-        if kind == "alt":
-            frags = [self.build(n) for n in node[1]]
-            start = frags[0].start
-            outs = list(frags[0].outs)
-            for f in frags[1:]:
-                s = self.emit(["split", start, f.start])
-                start = s
-                outs.extend(f.outs)
-            return _Frag(start, outs)
-        if kind == "quant":
-            _, inner, lo, hi = node
-            frags: list[_Frag] = []
-            for _ in range(lo):
-                frags.append(self.build(inner))
-            if hi is None:
-                body = self.build(inner)
-                s = self.emit(["split", body.start, -1])
-                self._patch(body.outs, s)
-                frags.append(_Frag(s, [(s, 2)]))
-            else:
-                for _ in range(hi - lo):
-                    body = self.build(inner)
-                    s = self.emit(["split", body.start, -1])
-                    frags.append(_Frag(s, body.outs + [(s, 2)]))
-            if not frags:
-                i = self.emit(["jump", -1])
-                return _Frag(i, [(i, 1)])
-            for a, b in zip(frags, frags[1:]):
-                self._patch(a.outs, b.start)
-            return _Frag(frags[0].start, frags[-1].outs)
-        raise AssertionError(kind)
-
-    def _patch(self, outs: list[tuple[int, int]], target: int) -> None:
-        for idx, slot in outs:
-            self.prog[idx][slot] = target
-
-
 def compile_path(src: str):
-    """Path pattern source → (program, start pc)."""
-    ast = _PathParser(_lex(" ".join(src.split()))).parse()
-    b = _GraphBuilder()
-    frag = b.build(ast)
-    acc = b.emit(["accept"])
-    b._patch(frag.outs, acc)
-    return b.prog, frag.start
+    """Path pattern source → (program, start pc). odin._compile's
+    Thompson construction emits ["edge", dir, matcher|None, next] for a
+    step and ["node", expr, next] (zero-width token test) for a node."""
+    return _compile(_PathParser(_lex(" ".join(src.split()))).parse())
 
 
 def _label_hit(matcher, label: str) -> bool:
@@ -606,51 +528,33 @@ def match_rows(sent_text: str, dictionary, engine=None) -> list[tuple]:
     return out
 
 
+def match_span_rows(span_text: str, dictionary) -> list[tuple]:
+    """match_rows for every sentence of one text span — the span function
+    of dep_events_df."""
+    from .extract import split_sentences
+    return [r for sent in split_sentences(span_text)
+            for r in match_rows(sent, dictionary)]
+
+
 def dep_events_df(documents) -> "DataFrame":
     """[O2] Corpus-wide dependency-rule event table over interleaved
     documents: one row per distinct (rule, pred, themes, causes, sites)
     with corpus-wide SEEN count — the dependency-grammar sibling of the
-    flagship's EER output. Spark shape: span explode (skew dissolves into
-    per-span rows) → one Arrow-batched mapInPandas memoized per distinct
-    span text (dedupe-before-compute) → hash aggregate with map-side
+    flagship's EER output. Spark shape: annotate.span_rows over
+    match_span_rows (span explode, so skew dissolves into per-span rows;
+    memoized per distinct span text) → hash aggregate with map-side
     combine. No driver-side loop, no collect."""
-    from collections.abc import Iterator
+    from functools import partial
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from .annotate import text_spans
+    from .annotate import span_rows
+    from .resources import entity_dictionary
 
-    spans = text_spans(documents)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .extract import split_sentences
-        from .resources import entity_dictionary
-        dictionary = entity_dictionary()
-        engine = default_engine()
-        memo: dict[str, list[tuple]] = {}
-        cols = ["doc_id", "rule", "pred", "themes", "causes", "sites",
-                "sources", "dests"]
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["span_text"]):
-                if not text:
-                    continue
-                res = memo.get(text)
-                if res is None:
-                    res = []
-                    for sent in split_sentences(text):
-                        res.extend(match_rows(sent, dictionary, engine))
-                    if len(memo) < 100_000:
-                        memo[text] = res
-                for r in res:
-                    rows.append((doc_id,) + r)
-            yield pd.DataFrame(rows, columns=cols)
-
-    ev = spans.mapInPandas(
-        gen, schema="doc_id string, rule string, pred string, "
-                    "themes string, causes string, sites string, "
-                    "sources string, dests string")
+    ev = span_rows(documents,
+                   partial(match_span_rows, dictionary=entity_dictionary()),
+                   "rule string, pred string, themes string, causes string, "
+                   "sites string, sources string, dests string")
     return (ev.groupBy("rule", "pred", "themes", "causes", "sites",
                        "sources", "dests")
               .agg(F.count("*").alias("seen")))

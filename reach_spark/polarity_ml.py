@@ -15,9 +15,9 @@ the classifier learns CONTEXT cues, and on neutral triggers the
 linguistic tier cannot read ("X regulates Y", trigger unseen in
 training) the context features alone decide — the LSTM's role.
 
-Spark shape (polarity_ml_df): span explode → one Arrow-batched
-mapInPandas memoized per distinct span text → hash aggregate; oracle =
-per-fixture expected rows from the same `polarity_rows` code path."""
+Spark shape (polarity_ml_df): `annotate.span_rows` over the span function
+`polarity_span_rows` → hash aggregate; oracle = per-fixture expected rows
+from the same `polarity_span_rows` code path."""
 
 from __future__ import annotations
 
@@ -111,9 +111,8 @@ def classify(lemmas: list[str], ev: dict,
 def complex_events(sent_text: str, dictionary) -> list[tuple[dict, list]]:
     """(event, lemmas, span_of) inputs for every regulation/activation in
     one sentence — shared by training, query, and oracle generator."""
-    from .extract import annotate_sentence, extract_sentence
-    ann = annotate_sentence(sent_text)
-    _, mentions = extract_sentence("d", 0, sent_text, dictionary)
+    from .extract import extract_sentence
+    ann, mentions = extract_sentence("d", 0, sent_text, dictionary)
     span_of = {m["mention_id"]:
                (m.get("trigger_start") if m.get("trigger_start") is not None
                 else m.get("start", 0),
@@ -136,46 +135,31 @@ def polarity_rows(sent_text: str, dictionary) -> list[tuple]:
     return rows
 
 
+def polarity_span_rows(span_text: str, dictionary) -> list[tuple]:
+    """polarity_rows for every sentence of one text span — the span
+    function of polarity_ml_df."""
+    from .extract import split_sentences
+    return [r for sent in split_sentences(span_text)
+            for r in polarity_rows(sent, dictionary)]
+
+
 def polarity_ml_df(documents) -> "DataFrame":  # noqa: F821
     """[P2] Corpus-wide ML-polarity table: one row per distinct
     (evt_label, trigger, ml_sign, agree) with corpus SEEN count."""
-    from collections.abc import Iterator
+    from functools import partial
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from .annotate import text_spans
+    from .annotate import span_rows
+    from .resources import entity_dictionary
 
-    spans = text_spans(documents)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .extract import split_sentences
-        from .resources import entity_dictionary
-        dictionary = entity_dictionary()
-        memo: dict[str, list[tuple]] = {}
-        cols = ["doc_id", "evt_label", "trigger", "ml_sign", "agree"]
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["span_text"]):
-                if not text:
-                    continue
-                res = memo.get(text)
-                if res is None:
-                    res = []
-                    for sent in split_sentences(text):
-                        res.extend(polarity_rows(sent, dictionary))
-                    if len(memo) < 100_000:
-                        memo[text] = res
-                for r in res:
-                    rows.append((doc_id,) + r)
-            yield pd.DataFrame(rows, columns=cols)
-
-    ev = spans.mapInPandas(
-        gen, schema="doc_id string, evt_label string, trigger string, "
-                    "ml_sign string, agree boolean")
+    ev = span_rows(documents,
+                   partial(polarity_span_rows, dictionary=entity_dictionary()),
+                   "evt_label string, trigger string, ml_sign string, "
+                   "agree boolean")
     return (ev.groupBy("evt_label", "trigger", "ml_sign", "agree")
               .agg(F.count("*").alias("seen")))
 
 
 __all__ = ["event_features", "classify", "complex_events",
-           "polarity_rows", "polarity_ml_df"]
+           "polarity_rows", "polarity_span_rows", "polarity_ml_df"]

@@ -112,14 +112,13 @@ def test_fries_frame_linking(spark, tmp_path):
     from reach_spark.fries import (context_frames, entity_frames,
                                    event_frames, passage_frames,
                                    sentence_frames, write_fries)
-    from reach_spark.annotate import split_sentences_df
     docs = spark.createDataFrame([Row(doc_id="fr1", spans=[
         Row(kind="text", text="MEK phosphorylates Ras.", media_ref="",
             offset=0),
         Row(kind="text", text="This was observed in human cells.",
             media_ref="", offset=1)])])
     res = extract_dataframe(spark, docs, with_coref=False)
-    sents = split_sentences_df(docs)
+    sents = res["sentences"]
     passages = {r["frame_id"] for r in passage_frames(docs).collect()}
     assert passages == {"pass-fr1-0", "pass-fr1-1"}
     sfs = sentence_frames(sents).collect()

@@ -341,6 +341,61 @@ def test_span_sentence_guard(spark):
         extract_document_mentions(docs).collect()
 
 
+def test_span_operators_match_one_thread(spark):
+    """Every per-span operator runs its span function through
+    annotate.span_rows: Spark's (keys, seen) table equals a one-thread
+    Counter of that span function over the non-empty text spans. The
+    input has a two-sentence span (si * 1000 offsets), the same span
+    text in two documents (a memo hit) and an empty text span."""
+    from collections import Counter
+    from functools import partial
+
+    from reach_spark.annotate import annotate_sentences, text_spans
+    from reach_spark.crf import crf_ner_df, crf_span_rows
+    from reach_spark.extract import o1_span_rows, split_span, token_rules_df
+    from reach_spark.odin_graph import dep_events_df, match_span_rows
+    from reach_spark.polarity_ml import polarity_ml_df, polarity_span_rows
+    from reach_spark.resources import entity_dictionary
+
+    two = ("TopBP1 phosphorylates ATR at Ser-216. "
+           "Ras activation increases the phosphorylation of MEK.")
+    one = "ASPP1 binds p53 and the Kras-GTP complex."
+
+    def span(text, offset):
+        return Row(kind="text", text=text, media_ref="", offset=offset)
+
+    docs = spark.createDataFrame([
+        Row(doc_id="a", spans=[span(two, 0), span("", 1), span(one, 2)]),
+        Row(doc_id="b", spans=[span(two, 0)])])
+    spans = text_spans(docs).collect()
+    texts = [r["span_text"] for r in spans]
+    assert sorted(texts) == sorted([two, "", one, two])
+
+    dictionary = entity_dictionary()
+    cases = [
+        (crf_ner_df, crf_span_rows),
+        (token_rules_df, partial(o1_span_rows, dictionary=dictionary)),
+        (dep_events_df, partial(match_span_rows, dictionary=dictionary)),
+        (polarity_ml_df, partial(polarity_span_rows, dictionary=dictionary)),
+    ]
+    for query, span_fn in cases:
+        want = Counter(r for t in texts if t for r in span_fn(t))
+        assert want, query.__name__
+        got = {tuple(r[:-1]): r["seen"] for r in query(docs).collect()}
+        assert got == dict(want), query.__name__
+    assert any(r[1] >= 1000 for r in crf_span_rows(two))  # 2nd sentence
+
+    # sentences table: sent_idx = span_pos * 1000 + index in the span
+    got = sorted((r["doc_id"], r["sent_idx"], r["sent_text"])
+                 for r in annotate_sentences(docs).collect())
+    want = sorted((r["doc_id"], r["span_pos"] * 1000 + li, sent)
+                  for r in spans if r["span_text"]
+                  for li, sent in enumerate(split_span(r["span_text"])))
+    assert got == want
+    assert [(d, i) for d, i, _ in got] == [
+        ("a", 0), ("a", 1), ("a", 2000), ("b", 0), ("b", 1)]
+
+
 # sha256 of the canonical JSON of mentions._extract_base over every
 # fixture sentence, recorded while annotate_sentence still computed the
 # light dependency parse for the negation check

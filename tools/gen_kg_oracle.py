@@ -144,57 +144,27 @@ def main() -> None:
     pair_tams = sorted((r["fidx"], r["tense1"], r["aspect1"],
                         r["tense2"], r["aspect2"]) for r in pair_rows)
 
-    # ---- per-fixture dependency-rule events (o2_dep_events oracle) ------
-    # sentence-local by construction: each interleaved span is exactly one
-    # fixture text, and odin_graph.match_rows is a pure function of the
-    # sentence — the same function the Spark mapInPandas calls, so one
-    # code path defines query and oracle.
-    from reach_spark.extract import split_sentences
-    from reach_spark.odin_graph import match_rows
+    # ---- per-fixture rows of the per-span queries ----------------------
+    # o2_dep_events, n5_crf_ner, o1_token_rules and p2_polarity_ml: each
+    # interleaved span is exactly one fixture text, so each query's span
+    # function over the fixture text — the same function its Spark query
+    # runs through annotate.span_rows, sentence split and si*1000 offsets
+    # included — is that fixture's expected rows.
+    from reach_spark.crf import crf_span_rows
+    from reach_spark.extract import o1_span_rows
+    from reach_spark.odin_graph import match_span_rows
+    from reach_spark.polarity_ml import polarity_span_rows
     from reach_spark.resources import entity_dictionary
     dictionary = entity_dictionary()
-    dep_events = []
-    for i, s in enumerate(sents):
-        for sent in split_sentences(s):
-            for r in match_rows(sent, dictionary):
-                dep_events.append((i,) + r)
-    dep_events.sort()
 
-    # ---- per-fixture statistical-NER rows (n5_crf_ner oracle) -----------
-    # same shared-code-path pattern: crf.crf_rows is what the Spark
-    # mapInPandas calls per sentence (si*1000 span offsets match
-    # crf.crf_ner_df)
-    from reach_spark.crf import crf_rows
-    crf_ner = []
-    for i, s in enumerate(sents):
-        for si, sent in enumerate(split_sentences(s)):
-            for lab, st, en, txt in crf_rows(sent):
-                crf_ner.append((i, lab, si * 1000 + st, si * 1000 + en,
-                                txt))
-    crf_ner.sort()
+    def per_fixture(span_fn):
+        return sorted((i,) + r for i, s in enumerate(sents)
+                      for r in span_fn(s))
 
-    # ---- per-fixture token-rule rows (o1_token_rules oracle) ------------
-    # extract.o1_rows is the same function the Spark mapInPandas calls per
-    # sentence (si*1000 span offsets match extract.token_rules_df)
-    from reach_spark.extract import o1_rows
-    o1_sites = []
-    for i, s in enumerate(sents):
-        for si, sent in enumerate(split_sentences(s)):
-            for rule, lab, st, en, txt, canon in o1_rows(sent, dictionary):
-                o1_sites.append((i, rule, lab, si * 1000 + st,
-                                 si * 1000 + en, txt, canon))
-    o1_sites.sort()
-
-    # ---- per-fixture ML-polarity rows (p2_polarity_ml oracle) -----------
-    # polarity_ml.polarity_rows is the same function the Spark mapInPandas
-    # calls per sentence — one code path defines query and oracle.
-    from reach_spark.polarity_ml import polarity_rows
-    pol_ml = []
-    for i, s in enumerate(sents):
-        for sent in split_sentences(s):
-            for r in polarity_rows(sent, dictionary):
-                pol_ml.append((i,) + r)
-    pol_ml.sort()
+    dep_events = per_fixture(lambda s: match_span_rows(s, dictionary))
+    crf_ner = per_fixture(crf_span_rows)
+    o1_sites = per_fixture(lambda s: o1_span_rows(s, dictionary))
+    pol_ml = per_fixture(lambda s: polarity_span_rows(s, dictionary))
 
     out = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "reach_spark", "_kg_expected.py")
